@@ -4,6 +4,7 @@ import graft.plans.{RewriteWindowTopK, TopKPerKey}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graft.Bridge.GraftInfoClass
 
 /**
  * Session-extension entry point — the idiomatic deployment packaging
@@ -18,7 +19,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  * works with no per-session register call — exactly how an openGauss
  * user gets the contrib names after CREATE EXTENSION. The
  * programmatic path (`SqlFunctions.register(spark)`) remains for
- * notebooks and tests on an existing session.
+ * notebooks and tests on an existing session; it skips every name
+ * this extension already injected.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,11 +29,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => TopKPerKey.strategy)
     graft.functions.SqlFunctions.allBuilders.foreach { case (name, b) =>
       ext.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), exprs => b(exprs)))
+        new ExpressionInfo(GraftInfoClass, name), exprs => b(exprs)))
     }
     graft.functions.SqlTableFunctions.all.foreach { case (name, b) =>
       ext.injectTableFunction((new FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), exprs => b(exprs)))
+        new ExpressionInfo(GraftInfoClass, name), exprs => b(exprs)))
     }
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /**
  * Parquet table loader for the driver-generated test data layout.
@@ -21,16 +23,86 @@ import org.apache.spark.sql.types.LongType
  * still reach the scan — Catalyst pushes both through Repartition —
  * and the small dimension tables stay unspread so broadcast plans are
  * unchanged.
+ *
+ * Schema memo: a bare `spark.read.parquet` starts one Spark job per
+ * load to read parquet footers and infer the schema, even with
+ * `mergeSchema` off and the files unchanged since the last load. The
+ * first load of a path in a session infers as usual and records the
+ * schema; a later load in the same session reads with
+ * `spark.read.schema(memo)`, which infers nothing and starts no job.
+ * The memo is valid only while its key matches:
+ *  - every file of the new relation's own FileIndex listing, by
+ *    (path, length, modification time) — an overwrite, append or
+ *    delete changes the key;
+ *  - the session conf values that steer parquet schema inference
+ *    (binaryAsString, int96AsTimestamp, caseSensitive,
+ *    inferTimestampNTZ, nanosAsLong, fieldId read, variant and
+ *    unknown-type annotations, mergeSchema, respectSummaryFiles,
+ *    partition column type inference).
+ * A mismatch infers again and replaces the entry. The memo is keyed
+ * weakly by session (one schema per path), so it dies with its
+ * session and no session sees another's entries.
  */
 object Tables {
+  /** The memo entry for one path: the schema inferred from `files`
+    * under `conf` (see [[inferenceConf]]). */
+  private final case class Memo(schema: StructType,
+      files: Seq[(String, Long, Long)], conf: Seq[Boolean])
+  private val schemas = new SessionMap[Memo]
+
   /** Plain load: pushdown-friendly scan, no repartition barrier. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df0 = spark.read.parquet(path)
+    val df0 = load(spark, s"$dir/$name.parquet")
     if (name == "events" && df0.schema("ts").dataType == LongType)
       df0.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else df0
   }
+
+  /** `spark.read.parquet(path)` through the session's schema memo. */
+  private def load(spark: SparkSession, path: String): DataFrame = {
+    val memo = schemas(spark)
+    val conf = inferenceConf(spark)
+    val hit = memo.get(path).filter(_.conf == conf).flatMap { m =>
+      val df = spark.read.schema(m.schema).parquet(path)
+      if (fileStamps(df) == m.files) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      memo.put(path, Memo(df.schema, fileStamps(df), conf))
+      df
+    }
+  }
+
+  /** The session conf that ParquetToSparkSchemaConverter, schema
+    * merging and partition discovery read while inferring a schema. */
+  private def inferenceConf(spark: SparkSession): Seq[Boolean] = {
+    val c = spark.sessionState.conf
+    Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.caseSensitiveAnalysis, c.parquetInferTimestampNTZEnabled,
+      c.legacyParquetNanosAsLong, c.parquetFieldIdReadEnabled,
+      c.parquetIgnoreVariantAnnotation,
+      c.parquetReaderRespectUnknownTypeAnnotation,
+      c.isParquetSchemaMergingEnabled, c.isParquetSchemaRespectSummaries,
+      c.partitionColumnTypeInferenceEnabled)
+  }
+
+  /** (path, length, modification time) of every file the relation's
+    * FileIndex listed when it was resolved — no second listing. */
+  private def fileStamps(df: DataFrame): Seq[(String, Long, Long)] =
+    fsRelation(df).map(_.location).collect {
+      case idx: PartitioningAwareFileIndex =>
+        idx.allFiles().map(f =>
+          (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }.getOrElse(Nil)
+
+  /** The file relation under a loaded frame. The analyzed plan, which
+    * the load already computed: Spark 4.1's unanalyzed plan is an
+    * UnresolvedDataSource that holds no relation yet. */
+  private def fsRelation(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation]
+    }
 
   /**
    * Spread load for CPU-heavy per-row kernels at the scan (text
@@ -70,12 +142,8 @@ object Tables {
    * never plans or materializes the physical scan. Falls back to the
    * exact physical count for non-file relations.
    */
-  private def estScanPartitions(df: DataFrame, par: Int): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.logical.collectFirst {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-    } match {
+  private def estScanPartitions(df: DataFrame, par: Int): Long =
+    fsRelation(df) match {
       case Some(fs) =>
         val conf = df.sparkSession.sessionState.conf
         val openCost = conf.filesOpenCostInBytes
@@ -87,5 +155,4 @@ object Tables {
         math.max(1L, (totalBytes + maxSplit - 1) / math.max(1L, maxSplit))
       case None => df.rdd.getNumPartitions.toLong
     }
-  }
 }

@@ -18,6 +18,8 @@ object TimeQuery {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      // the SQL surface the sql_* queries call, as in Bench
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // testdata timestamps are written tz-naive (timestamp[us], not UTC-
       // adjusted); read them as LTZ under the UTC session zone, as every

@@ -346,7 +346,9 @@ object SqlFunctions {
 
   /** Register every kernel function as a SQL temp function (the
     * notebook/test path; GraftExtensions injects the same surface at
-    * session build time), plus the FROM-clause table functions. */
+    * session build time), plus the FROM-clause table functions.
+    * Idempotent: names that already hold graft's function are skipped
+    * (see [[Bridge.registerFunction]]). */
   def register(spark: SparkSession): Unit = {
     allBuilders.foreach {
       case (name, builder) => Bridge.registerFunction(spark, name, builder)

@@ -167,13 +167,15 @@ object Ivf {
   /**
    * Persist the tagged corpus as a parquet table partitioned by list_id
    * (the 100 TB layout: a search's list filter prunes whole partitions
-   * at the reader). Returns the reloaded index table.
+   * at the reader). Returns the reloaded index table, read with the
+   * schema just written (list_id, the partition column, is already
+   * last) — re-inferring it from the footers would cost one more job.
    */
   def writeIndex(corpus: DataFrame, vecCol: String, model: Model,
       path: String): DataFrame = {
-    assign(corpus, vecCol, model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    corpus.sparkSession.read.parquet(path)
+    val tagged = assign(corpus, vecCol, model)
+    tagged.write.mode("overwrite").partitionBy("list_id").parquet(path)
+    corpus.sparkSession.read.schema(tagged.schema).parquet(path)
   }
 
   /**

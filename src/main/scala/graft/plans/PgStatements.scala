@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.SessionMap
 import graft.operators.{Flashback, Hierarchy, Hnsw, Iterate, Ivf, IvfBit, Ml, ModelCatalog, RecursiveSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -1220,24 +1221,6 @@ object PgStatements {
   /** Keyed BY SESSION: PG prepared statements are session scoped — a
     * JVM-global map let one session's DEALLOCATE ALL clear another's
     * (ADVICE r18). Weak keys: a session's statements die with it. */
-  /** Weak-keyed per-session state store: the session's objects die
-    * with it, and one session's statements can never see another's
-    * (PG session scoping — prepared statements, sequences, CLUSTER
-    * bookkeeping all ride this one idiom). */
-  private final class SessionMap[V] {
-    private val bySession = new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, V]]()
-    def apply(spark: SparkSession)
-        : scala.collection.concurrent.TrieMap[String, V] =
-      bySession.synchronized {
-        var m = bySession.get(spark)
-        if (m == null) {
-          m = scala.collection.concurrent.TrieMap.empty[String, V]
-          bySession.put(spark, m)
-        }
-        m
-      }
-  }
   private val preparedBySession = new SessionMap[String]
   private def normName(s: String) = s.toLowerCase(java.util.Locale.ROOT)
   private def preparedStmts(spark: SparkSession)

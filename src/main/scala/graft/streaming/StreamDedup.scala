@@ -144,6 +144,19 @@ object StreamDedup {
     n
   }
 
+  /** `r` with its hs sorted ascending; `r` itself when already sorted
+    * (a linear check — only pre-invariant state pays the sort). */
+  private def withSortedHs(r: RetainedDoc): RetainedDoc = {
+    var i = 1
+    while (i < r.hs.length && r.hs(i - 1) <= r.hs(i)) i += 1
+    if (i >= r.hs.length) r
+    else {
+      val hs = r.hs.clone()
+      java.util.Arrays.sort(hs)
+      r.copy(hs = hs)
+    }
+  }
+
   private def verifyPerBucket(tau: Double, maxCohort: Int)(key: Long,
       it: Iterator[BandDoc],
       state: GroupState[Seq[RetainedDoc]]): Iterator[VerifiedPair] = {
@@ -151,9 +164,12 @@ object StreamDedup {
     // invariant: retained docs hold their hs SORTED (stored below), so
     // every pair verify is a linear primitive merge; intersection
     // counts — and therefore emissions — are unchanged (hs sets are
-    // distinct hashes; order never enters the Jaccard).
+    // distinct hashes; order never enters the Jaccard). State restored
+    // from a checkpoint written before this invariant (same RetainedDoc
+    // schema) holds unsorted arrays: sort those on load, once — the
+    // sorted copy is what state.update stores back.
     val retained = scala.collection.mutable.ArrayBuffer.empty[RetainedDoc]
-    retained ++= state.getOption.getOrElse(Seq.empty)
+    retained ++= state.getOption.getOrElse(Seq.empty).map(withSortedHs)
     val out = scala.collection.mutable.ArrayBuffer.empty[VerifiedPair]
     arrivals.foreach { h =>
       val hsSorted = h.hs.clone()

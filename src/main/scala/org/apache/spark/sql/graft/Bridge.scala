@@ -72,22 +72,40 @@ object Bridge {
          Seq[org.apache.spark.sql.execution.SparkStrategy]) =
     (ext.buildOptimizerRules(spark), ext.buildPlannerStrategies(spark))
 
-  /** Register a named SQL function backed by a Catalyst expression builder. */
+  /** The ExpressionInfo class name that marks a registry entry as
+    * graft's own: what GraftExtensions injects and what
+    * [[registerFunction]] / [[registerTableFunction]] write. */
+  val GraftInfoClass = "graft"
+
+  /** Register a named SQL function backed by a Catalyst expression
+    * builder — a no-op when the session already holds graft's function
+    * under that name (injected by GraftExtensions or registered by an
+    * earlier call), so repeat registration neither replaces the entry
+    * nor logs Spark's "replaced a previously registered function" WARN.
+    * A builtin or user function of the same name is still replaced. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+    registerOnce(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry, name, builder)
 
   /** Register a named TABLE function (FROM-clause SRF) backed by a
-    * LogicalPlan builder. */
+    * LogicalPlan builder; idempotent like [[registerFunction]]. */
   def registerTableFunction(spark: org.apache.spark.sql.SparkSession,
       name: String,
       builder: Seq[Expression] =>
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+    registerOnce(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.tableFunctionRegistry, name, builder)
+
+  private def registerOnce[T](
+      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase[T],
+      name: String, builder: Seq[Expression] => T): Unit = {
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+    if (!reg.lookupFunction(id).exists(_.getClassName == GraftInfoClass))
+      reg.registerFunction(id,
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          GraftInfoClass, name), builder)
+  }
 
   /** The table-function names a SparkSessionExtensions instance would
     * inject at session build (for specs). */

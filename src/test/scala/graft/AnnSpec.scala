@@ -108,6 +108,23 @@ class AnnSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("writeIndex reloads with the written schema: equals inference, rows intact") {
+    val model = Ivf.build(emb, "embedding", nlists = 16)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_schema").toString
+    // lit() is non-nullable: the written files make it nullable, and so
+    // must the reloaded frame
+    val corpus = emb.select($"vec_id", $"embedding", lit(7).as("tag"))
+    val index = Ivf.writeIndex(corpus, "embedding", model, dir)
+    val inferred = spark.read.parquet(dir)
+    assert(index.schema == inferred.schema,
+      s"given ${index.schema.treeString} inferred ${inferred.schema.treeString}")
+    assert(index.schema.map(_.nullable) == inferred.schema.map(_.nullable))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id").collect().map(_.toSeq).toSeq
+    assert(rows(index) == rows(inferred))
+    assert(rows(index).length == emb.count())
+  }
+
   test("ivf knn join at nprobe=nlists equals broadcast knn join") {
     val model = Ivf.build(emb, "embedding", nlists = 16)
     val tagged = Ivf.assign(emb, "embedding", model)

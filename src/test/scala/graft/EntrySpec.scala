@@ -34,6 +34,57 @@ class EntrySpec extends SparkSpec {
       tfNames.contains("normal_rand"))
   }
 
+  test("register is idempotent: a repeat leaves the registry unchanged, no replace WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = "replaced a previously registered function"
+    def warnings(body: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val a = new AbstractAppender("graft-capture", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = {
+          seen.add(e.getMessage.getFormattedMessage); ()
+        }
+      }
+      a.start()
+      val root = LogManager.getRootLogger.asInstanceOf[Logger]
+      root.addAppender(a)
+      try body finally { root.removeAppender(a); a.stop() }
+      scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+    }
+    val s = spark.newSession()
+    val fr = s.sessionState.functionRegistry
+    val tfr = s.sessionState.tableFunctionRegistry
+    def snapshot = (
+      fr.listFunction().map(id => id -> fr.lookupFunctionBuilder(id).get).toMap,
+      tfr.listFunction().map(id => id -> tfr.lookupFunctionBuilder(id).get).toMap)
+    val (fns, tfns) = snapshot
+    // the session was built with GraftExtensions, so even the first
+    // call finds every name already holding graft's function
+    val logged = warnings {
+      graft.functions.SqlFunctions.register(s)
+      graft.functions.SqlFunctions.register(s)
+    }
+    val (fns2, tfns2) = snapshot
+    assert(fns2.keySet == fns.keySet && tfns2.keySet == tfns.keySet)
+    assert(fns.forall { case (id, b) => fns2(id) eq b },
+      "a repeat register replaced a function builder")
+    assert(tfns.forall { case (id, b) => tfns2(id) eq b })
+    assert(!logged.exists(_.contains(replaced)), logged.filter(_.contains(replaced)))
+    assert(s.sql("SELECT l2_distance(array(0F, 3F), array(4F, 0F))")
+      .head().getDouble(0) == 5.0)
+    // the capture does see the WARN a real replacement logs
+    val other = spark.newSession()
+    val forced = warnings {
+      other.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "l2_distance", graft.functions.SqlFunctions.allBuilders("l2_distance"),
+        "scala_udf")
+    }
+    assert(forced.exists(_.contains(replaced)), forced)
+  }
+
   test("generate_series: PG inclusive bounds, signed step, Range plan") {
     graft.functions.SqlFunctions.register(spark)
     assert(spark.sql("SELECT * FROM generate_series(1, 5)")

@@ -1963,28 +1963,8 @@ class PgStatementsSpec extends SparkSpec {
 
   test("fused multi-match detection: MERGE and UPDATE...FROM run NO " +
       "extra plan-time probe job (one pass per statement)") {
-    def countJobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // the listener bus is asynchronous: wait for the count to settle
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(50)
-          val cur = n.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-        n.get()
-      } finally { spark.sparkContext.removeSparkListener(l); () }
-    }
+    def countJobs(body: => Unit): Int =
+      org.apache.spark.graft.JobCount(spark.sparkContext)(body)
     dmlFixture()
     Seq((2L, 200.0), (4L, 400.0)).toDF("k", "nb")
       .createOrReplaceTempView("stmt_jc_src")

@@ -64,6 +64,55 @@ class StreamingSpec extends SparkSpec {
       s"stream/batch diff=${((got diff expected) ++ (expected diff got)).take(5)}")
   }
 
+  test("VERIFIED pairs resume from a checkpoint whose state holds unsorted hs") {
+    import graft.streaming.StreamDedup
+    import StreamDedup.{BandDoc, RetainedDoc, VerifiedPair}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    val words = (0 until 40).map(i => s"w$i")
+    val a = words.mkString(" ")
+    val b = words.updated(20, "zz").mkString(" ")
+    val root = java.nio.file.Files.createTempDirectory("graft_sd_resume").toFile
+    val in = new java.io.File(root, "in")
+    in.mkdirs()
+    def put(name: String, id: Long, text: String): Unit = {
+      java.nio.file.Files.writeString(new java.io.File(in, name).toPath,
+        s"""{"doc_id":$id,"text":"$text"}\n"""); ()
+    }
+    def hits = StreamDedup.bandDocs(
+      spark.readStream.schema("doc_id LONG, text STRING").json(in.toString),
+      "text", "doc_id", "doc_id")
+    def runOnce(ds: org.apache.spark.sql.Dataset[VerifiedPair]): Unit = {
+      val q = ds.writeStream.format("parquet")
+        .option("checkpointLocation", s"$root/ckpt")
+        .option("path", s"$root/out")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    try {
+      // the state an earlier version left: the same RetainedDoc schema,
+      // hs in arrival (here: descending) order instead of sorted
+      put("0.json", 1L, a)
+      runOnce(hits.as[BandDoc].groupByKey(_.bucket_key)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_: Long, it: Iterator[BandDoc], st: GroupState[Seq[RetainedDoc]]) =>
+            st.update(st.getOption.getOrElse(Nil) ++
+              it.map(d => RetainedDoc(d.seq, d.doc_id, d.hs.sorted.reverse)))
+            Iterator.empty[VerifiedPair]
+        })
+      put("1.json", 2L, b)
+      runOnce(StreamDedup.verifiedPairs(hits, tau = 0.5))
+      val expected = graft.operators.Dedup
+        .minhashPairs(Seq((1L, a), (2L, b)).toDF("doc_id", "text"),
+          "text", "doc_id", 64, 16, tau = 0.5)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(expected.map(p => (p._1, p._2)) == Set((1L, 2L)),
+        "the planted pair is a verified near-dup")
+      val got = spark.read.parquet(s"$root/out")
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got == expected, s"resumed stream found $got, batch $expected")
+    } finally rmTree(root)
+  }
+
   test("foreachBatch-maintained incremental matview equals batch under slicing") {
     import graft.operators.Matview
     val cents = "CAST(round(value * 100, 0) AS BIGINT)"
